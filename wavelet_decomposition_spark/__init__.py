@@ -20,3 +20,9 @@ streaming/  Structured Streaming facade over the 1m tier.
 """
 
 __version__ = "0.1.0"
+
+from . import _zipcache
+
+# every engine UDF imports this package when a worker unpickles it, so the
+# reused worker keeps the stat-keyed zip invalidation for its later tasks
+_zipcache.install()

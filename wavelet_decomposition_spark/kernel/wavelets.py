@@ -190,19 +190,6 @@ def flat_to_scale_pos(
     return np.concatenate(scale_idx_parts), np.concatenate(pos_parts)
 
 
-def scale_pos_to_flat(
-    vy: int = VY, vw: int = VW, vd: int = VD, dpy: int = DPY
-) -> np.ndarray:
-    """Inverse permutation: flat index of each (scale_idx, pos), as a lookup
-    array indexed by the rank of (scale_idx, pos) in lexicographic order."""
-    scale_idx, pos = flat_to_scale_pos(vy, vw, vd, dpy)
-    m = scale_idx.size
-    order = np.lexsort((pos, scale_idx))
-    inv = np.empty(m, dtype=np.int64)
-    inv[:] = np.arange(m)[order]
-    return inv  # inv[rank] = flat index
-
-
 def scale_sizes(vy: int = VY, vw: int = VW, vd: int = VD, dpy: int = DPY):
     """Length of each scale list, indexed by scale_idx (finest -> coarsest,
     then offset)."""

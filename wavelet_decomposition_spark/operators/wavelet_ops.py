@@ -47,18 +47,23 @@ def python_stage_partitions(projected: DataFrame) -> int:
     size — rather than a constant tuned for one deployment).
 
     Targets ~2 MB of (already projected) input per task at the small
-    end — each applyInPandas task pays a fixed worker/Arrow/scheduling
-    cost that a fleet of 3k-row tasks cannot amortize (measured on the
-    flagship 1m tier: 64 fixed tasks = 1.3 s, 32 = 0.8 s for the
-    identical kernel) — and caps per-task input at ~64 MB once the data
-    is large enough to keep every core busy anyway. The task count
-    never drops below ``defaultParallelism``: Catalyst's size estimate
-    is unreliable below a generated/exploded lineage (a gap-filled grid
-    is far larger than its estimate), and a Python-CPU-heavy kernel
-    must keep every core busy even when its input bytes are few
-    (measured: the db4 VisuShrink kernel serialized onto a handful of
-    tasks regressed 1.9 s -> 5.3 s before this floor). Falls back to
-    ``2 * defaultParallelism`` when Catalyst has no usable estimate.
+    end, because each Python task pays a fixed worker/Arrow/scheduling
+    cost that a fleet of 3k-row tasks cannot amortize, and caps
+    per-task input at ~64 MB once the data is large enough to keep
+    every core busy anyway. Measured on 4 cores over a 3,000-conversation
+    1m tier, Haar bands: 64 fixed tasks = 2.4 s, 32 = 1.3 s, 16 = 0.9 s,
+    the 4 derived here = 0.35 s; an empty ``mapInArrow`` still pays
+    ~75 ms per task (64 tasks: 1.2 s, 4 tasks: 0.15 s), so the gap
+    between task counts is that fixed cost, not the kernel.
+
+    The task count never drops below ``defaultParallelism``: Catalyst's
+    size estimate is unreliable below a generated/exploded lineage (a
+    gap-filled grid is far larger than its estimate), and a
+    Python-CPU-heavy kernel must keep every core busy even when its
+    input bytes are few (measured: the db4 VisuShrink kernel serialized
+    onto a handful of tasks regressed 1.9 s -> 5.3 s before this floor).
+    Falls back to ``2 * defaultParallelism`` when Catalyst has no usable
+    estimate.
     """
     sc = projected.sparkSession.sparkContext
     dp = sc.defaultParallelism
