@@ -94,6 +94,21 @@ def test_threshold_zero_is_identity(spark):
         assert row.n_zeroed == 0
 
 
+@pytest.mark.parametrize("threshold", [-0.1, float("nan")])
+def test_threshold_negative_or_nan_rejected(spark, threshold):
+    """A negative threshold would make soft shrinkage GROW every detail
+    coefficient (|d| - thr > |d|), breaking den_energy <= input_energy;
+    NaN would poison every window. Both are rejected when the stage is
+    built."""
+    pdf, _ = _noisy_windows(n_conv=1)
+    df = spark.createDataFrame(pdf)
+    with pytest.raises(ValueError, match="threshold"):
+        denoise_windows(
+            df, "v", wavelet="haar", levels=3, window_len=128,
+            threshold=threshold,
+        )
+
+
 def test_hard_mode_zeroes_but_preserves_survivors(spark):
     pdf, _ = _noisy_windows(n_conv=2)
     df = spark.createDataFrame(pdf)

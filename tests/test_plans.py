@@ -146,29 +146,49 @@ def test_solve_stage_not_coalesced(spark, queries):
     assert plan.count("Exchange") == 2  # resample's + the solve repartition
 
 
-def test_wavelet_stage_single_shuffle(spark):
-    """The pyramid stage adds exactly one exchange (the bucket repartition);
-    the groupBy reuses that clustering instead of shuffling again."""
+_BUCKETED_STAGES = {
+    "dwt_windows": lambda w, c, tier: w.dwt_windows(
+        tier, "turns", wavelet="haar", levels=3, window_len=64,
+        sparse_fill_step="1 minute",
+    ),
+    "energy_windows": lambda w, c, tier: w.energy_windows(
+        tier, "turns", wavelet="db4", levels=3, window_len=64,
+        sparse_fill_step="1 minute",
+    ),
+    "denoise_windows": lambda w, c, tier: w.denoise_windows(
+        tier, "turns", wavelet="db4", levels=3, window_len=64,
+        sparse_fill_step="1 minute",
+    ),
+    "encode_blocks": lambda w, c, tier: c.encode_blocks(tier, ["turns"]),
+}
+
+
+@pytest.mark.parametrize("stage", list(_BUCKETED_STAGES))
+def test_wavelet_stage_single_shuffle(spark, stage):
+    """Every bucketed Python stage (wavelet_ops.bucketed_apply) adds exactly
+    one exchange (the bucket repartition); the groupBy reuses that
+    clustering instead of shuffling again."""
     from wavelet_decomposition_spark.io.transcripts import transcripts_df
-    from wavelet_decomposition_spark.operators import activity, rollup, wavelet_ops
+    from wavelet_decomposition_spark.operators import (
+        activity, compress, rollup, wavelet_ops,
+    )
 
     tier = rollup.rollup_once(
         activity.activity_raw(transcripts_df(spark, 20, seed=3)), "1m"
     )
     base = _plan(tier, "simple").count("Exchange")
-    coefs = wavelet_ops.dwt_windows(
-        tier, "turns", wavelet="haar", levels=3, window_len=64,
-        sparse_fill_step="1 minute",
-    )
-    plan = _plan(coefs, "simple")
+    out = _BUCKETED_STAGES[stage](wavelet_ops, compress, tier)
+    plan = _plan(out, "simple")
     assert plan.count("Exchange") == base + 1
-    # the per-coefficient fan-out must stay JVM-side: a Generate (posexplode)
-    # node ABOVE the single Python stage, never a second Python pass
-    assert "Generate" in plan
     assert plan.count("FlatMapGroupsInPandas") == 1
     # pre-UDF projection: unused tier columns must not ride the shuffle into
     # the Python stage (Catalyst cannot prune into grouped-map UDFs itself)
     assert "chars" not in plan and "tool_calls" not in plan
+    if stage == "dwt_windows":
+        # the per-coefficient fan-out must stay JVM-side: a Generate
+        # (posexplode) node ABOVE the single Python stage, never a second
+        # Python pass
+        assert "Generate" in plan
 
 
 @pytest.mark.slow

@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.io.transcripts import transcripts_df
@@ -124,13 +125,35 @@ def test_sparse_fill_fusion_matches_explicit_gapfill(spark):
     np.testing.assert_allclose(
         e_got["energy"].to_numpy(), e_want["energy"].to_numpy(), rtol=1e-9
     )
+    # denoise path: same windows, so the same per-window scalars and output
+    d_order = ["conv_id", "window_id"]
+    d_want = (
+        wavelet_ops.denoise_windows(dense, "turns", **kw)
+        .orderBy(*d_order).toPandas()
+    )
+    d_got = (
+        wavelet_ops.denoise_windows(
+            tier, "turns", sparse_fill_step="1 minute", **kw
+        )
+        .orderBy(*d_order).toPandas()
+    )
+    assert len(d_got) == len(d_want) and len(d_got) > 0
+    for c in d_order:
+        assert (d_got[c].to_numpy() == d_want[c].to_numpy()).all()
+    for c in ("sigma", "threshold", "den_energy"):
+        np.testing.assert_allclose(
+            d_got[c].to_numpy(), d_want[c].to_numpy(), rtol=0, atol=1e-12
+        )
+    np.testing.assert_allclose(
+        np.stack(d_got["denoised"].to_numpy()),
+        np.stack(d_want["denoised"].to_numpy()),
+        rtol=0, atol=1e-12,
+    )
 
 
 def test_sparse_fill_rejects_offgrid_timestamps(spark):
     """Sparse mode must ERROR on off-grid input, not silently floor-divide
     rows into the wrong window cell."""
-    import pytest
-
     df = spark.createDataFrame(
         [("c", "2024-01-01 00:00:00", 1.0), ("c", "2024-01-01 00:01:30", 2.0)],
         "conv_id string, bucket_ts string, turns double",
@@ -143,9 +166,25 @@ def test_sparse_fill_rejects_offgrid_timestamps(spark):
         out.collect()
 
 
-def test_sparse_fill_rejects_duplicate_grid_rows(spark):
-    import pytest
+@pytest.mark.parametrize("stage", ["dwt_window_bands", "energy_windows",
+                                   "denoise_windows"])
+@pytest.mark.parametrize("step", ["0 seconds", "-1 minute", "1ns"])
+def test_sparse_fill_rejects_nonpositive_step(spark, stage, step):
+    """A grid step below one microsecond is rejected when the stage is
+    built, not inside a worker (where ``delta % 0`` only warns and every
+    row would collide at position 0)."""
+    df = spark.createDataFrame(
+        [("c", "2024-01-01 00:00:00", 1.0)],
+        "conv_id string, bucket_ts string, turns double",
+    ).withColumn("bucket_ts", F.col("bucket_ts").cast("timestamp"))
+    with pytest.raises(ValueError, match="sparse_fill_step"):
+        getattr(wavelet_ops, stage)(
+            df, "turns", wavelet="haar", levels=2, window_len=8,
+            sparse_fill_step=step,
+        )
 
+
+def test_sparse_fill_rejects_duplicate_grid_rows(spark):
     df = spark.createDataFrame(
         [("c", "2024-01-01 00:00:00", 1.0), ("c", "2024-01-01 00:00:00", 2.0),
          ("c", "2024-01-01 00:01:00", 3.0)],

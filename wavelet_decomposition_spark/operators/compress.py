@@ -20,35 +20,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel import deltadelta, gorilla
+from .wavelet_ops import bucketed_apply
 
 
-def encode_blocks(
-    tier_df: DataFrame,
-    value_cols,
-    group_col: str = "conv_id",
-    ts_col: str = "bucket_ts",
-    block_col: str = "day",
-) -> DataFrame:
-    """Compress one tier into per-(conv, day) blocks."""
+def encode_blocks(tier_df: DataFrame, value_cols) -> DataFrame:
+    """Compress one tier (``conv_id, bucket_ts, <value_cols>``) into
+    per-(conv, day) blocks."""
     value_cols = list(value_cols)
     schema = (
-        f"{group_col} string, {block_col} date, n_points int, ts_blob binary, "
+        "conv_id string, day date, n_points int, ts_blob binary, "
         + ", ".join(f"{c}_blob binary" for c in value_cols)
     )
 
     def _enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one Spark group = one BUCKET of conversations (per-conv UDF calls
-        # were the profiled bottleneck); block boundaries fall where the
-        # (conv, day) pair changes, so segmentation is one vectorized pass
-        # and the codecs run ONCE per bucket over the concatenated arrays
-        # (encode_many — per-block Python is header packing + slicing only).
-        pdf = pdf.sort_values([group_col, ts_col])
-        ts_all = pdf[ts_col].astype("datetime64[us]").to_numpy().view(np.int64)
-        convs = pdf[group_col].to_numpy()
-        days = pdf[block_col].to_numpy()
+        # one Spark group = one BUCKET of conversations; block boundaries
+        # fall where the (conv, day) pair changes, so segmentation is one
+        # vectorized pass and the codecs run ONCE per bucket over the
+        # concatenated arrays (encode_many — per-block Python is header
+        # packing + slicing only).
+        pdf = pdf.sort_values(["conv_id", "bucket_ts"])
+        ts_all = (
+            pdf["bucket_ts"].astype("datetime64[us]").to_numpy().view(np.int64)
+        )
+        convs = pdf["conv_id"].to_numpy()
+        days = pdf["day"].to_numpy()
         change = (convs[1:] != convs[:-1]) | (days[1:] != days[:-1])
         bounds = np.flatnonzero(np.r_[True, change, True])
-        out = {group_col: convs[bounds[:-1]], block_col: days[bounds[:-1]],
+        out = {"conv_id": convs[bounds[:-1]], "day": days[bounds[:-1]],
                "n_points": (bounds[1:] - bounds[:-1]).astype(np.int32),
                "ts_blob": deltadelta.encode_many(ts_all, bounds)}
         for c in value_cols:
@@ -57,62 +55,36 @@ def encode_blocks(
             )
         return pd.DataFrame(out)
 
-    with_day = tier_df.select(group_col, ts_col, *value_cols).withColumn(
-        block_col, F.to_date(ts_col)
+    with_day = tier_df.select("conv_id", "bucket_ts", *value_cols).withColumn(
+        "day", F.to_date("bucket_ts")
     )
-    # Python-CPU-bound group stage: size-derived task count and bucketed
-    # conversations (see wavelet_ops.python_stage_partitions for the
-    # rationale and measurements); explicit pre-UDF projection —
-    # Catalyst cannot prune into grouped-map UDFs
-    from .wavelet_ops import python_stage_partitions
-
-    p = python_stage_partitions(with_day)
-    n_buckets = p * 4
-    bucketed = with_day.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(n_buckets))
-    )
-    return (
-        bucketed.repartition(p, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_enc, schema=schema)
-    )
+    return bucketed_apply(with_day, "conv_id", _enc, schema)
 
 
-def decode_blocks(
-    blocks: DataFrame,
-    value_cols,
-    group_col: str = "conv_id",
-    ts_col: str = "bucket_ts",
-    block_col: str = "day",
-) -> DataFrame:
+def decode_blocks(blocks: DataFrame, value_cols) -> DataFrame:
     """Expand blocks back to one row per point (exact inverse of
     :func:`encode_blocks` up to float64 bits)."""
     value_cols = list(value_cols)
-    schema = f"{group_col} string, {ts_col} timestamp, " + ", ".join(
+    schema = "conv_id string, bucket_ts timestamp, " + ", ".join(
         f"{c} double" for c in value_cols
     )
 
     def _dec(pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf):
-            return pd.DataFrame(columns=[group_col, ts_col, *value_cols])
+            return pd.DataFrame(columns=["conv_id", "bucket_ts", *value_cols])
         ts, bounds = deltadelta.decode_many(list(pdf["ts_blob"]))
         data = {
-            group_col: np.repeat(pdf[group_col].to_numpy(), np.diff(bounds)),
-            ts_col: pd.to_datetime(ts, unit="us"),
+            "conv_id": np.repeat(pdf["conv_id"].to_numpy(), np.diff(bounds)),
+            "bucket_ts": pd.to_datetime(ts, unit="us"),
         }
         for c in value_cols:
             vals, _ = gorilla.decode_many(list(pdf[f"{c}_blob"]))
             data[c] = vals
         return pd.DataFrame(data)
 
-    p = blocks.sparkSession.sparkContext.defaultParallelism * 2
-    bucketed = blocks.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(p * 4))
-    )
-    return (
-        bucketed.repartition(p, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_dec, schema=schema)
+    return bucketed_apply(
+        blocks, "conv_id", _dec, schema,
+        n_partitions=blocks.sparkSession.sparkContext.defaultParallelism * 2,
     )
 
 

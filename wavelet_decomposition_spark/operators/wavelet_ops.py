@@ -1,22 +1,32 @@
-"""DWT / MODWT pyramids over gap-filled activity-series windows
-(north star: per-scale detail/approximation coefficients and energy spectra
-as vectorized Arrow pandas UDFs).
+"""DWT / MODWT / wavelet-packet products over gap-filled activity-series
+windows (north star: per-scale detail/approximation coefficients, energy
+spectra and denoised windows as vectorized Arrow pandas UDFs).
 
-Each (conv_id) group's gap-filled series is cut into fixed dyadic windows of
-``2**levels_cap * k`` points; one ``applyInPandas`` call computes the whole
-pyramid for all of a group's windows vectorized (numpy kernel,
-kernel/dwt.py). Group size is bounded by the window length x windows per
-conversation, so Arrow batches stay small and skew is capped.
+Every windowed product runs on ONE scaffold. ``bucketed_apply`` is the
+Spark stage: project, hash conversations into buckets, repartition on the
+bucket and ``applyInPandas`` once per bucket. ``_window_pass`` is the
+per-bucket numpy: each conversation's series is cut into fixed dyadic
+windows of ``window_len`` points (zero-padded tail; optionally scattered
+straight from the sparse tier, ``sparse_fill_step``) into one window
+matrix, and a product-specific kernel (numpy, kernel/dwt.py) maps that
+matrix to output rows. Group size is bounded by the window length x
+windows per conversation, so Arrow batches stay small and skew is capped.
+``compress`` runs its codec stages through the same ``bucketed_apply``.
 
-Output: the Python stage emits the compact band form (BAND_SCHEMA — one row
-per (conv_id, window_id, band) with coefficients packed as array<double>;
-``dwt_window_bands``), which is also the right storage layout at scale. The
-long per-coefficient view (COEF_SCHEMA: conv_id, window_id, wavelet, level,
-k, coef_type, coef) is a JVM-side posexplode over it (``dwt_windows``).
-level 1..J are details (finest first), level J approx rows carry
-coef_type='approx'. Energy spectra are a relational groupBy over the long
-table — sum(coef*coef) per (conv_id, window_id, level, coef_type) —
-mirroring the reference's per-scale energy analytics (SURVEY.md A7).
+Products:
+- ``dwt_window_bands``: the compact band form (BAND_SCHEMA — one row per
+  (conv_id, window_id, band) with coefficients packed as array<double>),
+  which is also the right storage layout at scale. The long
+  per-coefficient view (COEF_SCHEMA: conv_id, window_id, wavelet, level,
+  k, coef_type, coef) is a JVM-side posexplode over it (``dwt_windows``).
+  Levels 1..J are details (finest first); the level-J approx rows carry
+  coef_type='approx'.
+- ``energy_windows``: per-scale energy spectra, sum(coef*coef) per
+  (conv_id, window_id, level, coef_type), computed in the same kind of
+  pass without materializing coefficients — mirroring the reference's
+  per-scale energy analytics (SURVEY.md A7). ``energy_spectrum`` is the
+  relational groupBy over the long table that it is checked against.
+- ``denoise_windows``: VisuShrink wavelet shrinkage per window.
 """
 
 from __future__ import annotations
@@ -79,7 +89,39 @@ def python_stage_partitions(projected: DataFrame) -> int:
     return max(dp, min(b // (2 << 20), max(dp * 4, b // (64 << 20))))
 
 
-def _positions(pdf, codes, counts, starts, ts_col, step_us, window_len):
+def bucketed_apply(
+    df: DataFrame,
+    group_col: str,
+    fn,
+    schema: str,
+    n_partitions: int | None = None,
+) -> DataFrame:
+    """Run ``fn`` once per BUCKET of ``group_col`` values as one grouped-map
+    Arrow stage: every group of a bucket arrives in one pandas frame, so
+    per-group Python overhead is amortized across the bucket (thousands
+    of tiny per-conversation UDF calls were the profile's dominant cost).
+
+    The task count defaults to :func:`python_stage_partitions` of ``df``:
+    AQE's byte-based coalescing can't see Python CPU, and a fixed
+    parallelism multiple overpays per-task overhead on small tiers. The
+    explicit repartition on the bucket key both pins the task count and
+    satisfies the groupBy clustering (no extra shuffle). Callers project
+    ``df`` to the columns ``fn`` reads first: Catalyst cannot prune
+    columns INTO a grouped-map UDF (the whole row ships through Arrow).
+    """
+    if n_partitions is None:
+        n_partitions = python_stage_partitions(df)
+    bucketed = df.withColumn(
+        "_bucket", F.pmod(F.hash(group_col), F.lit(n_partitions * 4))
+    )
+    return (
+        bucketed.repartition(n_partitions, "_bucket")
+        .groupBy("_bucket")
+        .applyInPandas(fn, schema=schema)
+    )
+
+
+def _positions(pdf, codes, counts, starts, step_us, window_len):
     """(grid position per row, windows per conversation).
 
     Dense mode (``step_us`` None): rows ARE the grid (input pre-gap-filled).
@@ -90,7 +132,7 @@ def _positions(pdf, codes, counts, starts, ts_col, step_us, window_len):
         pos = np.arange(len(pdf)) - starts[codes]
         nwin = np.maximum(1, -(-counts // window_len))
     else:
-        ts = pdf[ts_col].to_numpy(dtype="datetime64[us]").view(np.int64)
+        ts = pdf["bucket_ts"].to_numpy(dtype="datetime64[us]").view(np.int64)
         delta = ts - ts[starts][codes]
         if (delta % step_us).any():
             raise ValueError(
@@ -109,23 +151,14 @@ def _positions(pdf, codes, counts, starts, ts_col, step_us, window_len):
     return pos, nwin
 
 
-def dwt_window_bands(
-    filled: DataFrame,
-    value_col: str,
-    wavelet: str = "haar",
-    levels: int = 5,
-    window_len: int | None = None,
-    transform: str = "dwt",
-    group_col: str = "conv_id",
-    ts_col: str = "bucket_ts",
-    n_partitions: int | None = None,
-    sparse_fill_step: str | None = None,
-) -> DataFrame:
-    """Pyramid-transform a gap-filled series per conversation.
-
-    ``window_len`` defaults to ``2**levels * 8``; tail windows are zero-padded
-    to the dyadic length (zero turns = genuinely zero activity, so padding is
-    semantically the zero-fill continued).
+def _window_pass(filled, value_col, window_len, sparse_fill_step, kernel,
+                 schema):
+    """The shared scaffold of every windowed wavelet product: cut each
+    conversation's ``(conv_id, bucket_ts, value_col)`` series into
+    ``window_len``-point windows (tail zero-padded) and return
+    ``kernel(M, win_conv, win_id)`` per bucket, where row ``i`` of the
+    ``(windows, window_len)`` matrix ``M`` is window ``win_id[i]`` of
+    conversation ``win_conv[i]``.
 
     ``sparse_fill_step`` fuses the zero gap-fill into the window builder:
     pass the grid step (e.g. ``"1 minute"``) and the input may be the SPARSE
@@ -135,88 +168,109 @@ def dwt_window_bands(
     tests/test_wavelet_ops_spark.py). At scale this removes the exploded
     grid's join/shuffle — the gap-filled series is never materialized.
     """
+    step_us = None
+    if sparse_fill_step is not None:
+        step_us = int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
+        if step_us <= 0:
+            raise ValueError(
+                f"sparse_fill_step must be at least 1 microsecond, got "
+                f"{sparse_fill_step!r}"
+            )
+
+    def _window_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["conv_id", "bucket_ts"])
+        codes, uniques = pd.factorize(pdf["conv_id"], sort=False)
+        counts = np.bincount(codes)
+        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+        pos, nwin = _positions(pdf, codes, counts, starts, step_us,
+                               window_len)
+        win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
+        total_win = int(nwin.sum())
+        M = np.zeros((total_win, window_len), dtype=np.float64)
+        M[win_base[codes] + pos // window_len, pos % window_len] = (
+            pdf[value_col].to_numpy(dtype=np.float64)
+        )
+        win_code = np.repeat(np.arange(counts.size), nwin)
+        win_conv = np.asarray(uniques, dtype=object)[win_code]
+        win_id = (np.arange(total_win) - win_base[win_code]).astype(np.int32)
+        return kernel(M, win_conv, win_id)
+
+    projected = filled.select("conv_id", "bucket_ts", value_col)
+    return bucketed_apply(projected, "conv_id", _window_bucket, schema)
+
+
+def _pyramid_bands(M, wavelet, levels, transform):
+    """``[(level, coefficient matrix, coef_type)]`` per band: details
+    finest first then the level-``levels`` approximation, or for
+    ``"wpt"`` the ``2**levels`` packet leaves ``bandNN`` in natural
+    (Paley) order."""
+    if transform == "wpt":
+        return [
+            (levels, b, f"band{i:02d}")
+            for i, b in enumerate(kdwt.wpt_batch(M, wavelet, levels))
+        ]
+    if transform == "dwt":
+        details, approx = kdwt.dwt_batch(M, wavelet, levels)
+    else:
+        details, approx = kdwt.modwt_batch(M, wavelet, levels)
+    return [
+        *(((j + 1), d, "detail") for j, d in enumerate(details)),
+        (levels, approx, "approx"),
+    ]
+
+
+def _band_frame(win_conv, win_id, wavelet, bands, col, values):
+    """Band-major output rows, one per (band, window); ``values`` holds
+    column ``col`` in that order."""
+    n_win = len(win_id)
+    return pd.DataFrame(
+        {
+            "conv_id": np.tile(win_conv, len(bands)),
+            "window_id": np.tile(win_id, len(bands)),
+            "wavelet": wavelet,
+            "level": np.repeat(
+                np.array([b[0] for b in bands], dtype=np.int32), n_win
+            ),
+            "coef_type": np.repeat(
+                np.array([b[2] for b in bands], dtype=object), n_win
+            ),
+            col: values,
+        }
+    )
+
+
+def dwt_window_bands(
+    filled: DataFrame,
+    value_col: str,
+    wavelet: str = "haar",
+    levels: int = 5,
+    window_len: int | None = None,
+    transform: str = "dwt",
+    sparse_fill_step: str | None = None,
+) -> DataFrame:
+    """Pyramid-transform a gap-filled series per conversation.
+
+    ``window_len`` defaults to ``2**levels * 8``; tail windows are zero-padded
+    to the dyadic length (zero turns = genuinely zero activity, so padding is
+    semantically the zero-fill continued). ``sparse_fill_step`` fuses the
+    zero gap-fill (see :func:`_window_pass`).
+    """
     if window_len is None:
         window_len = (2**levels) * 8
     if transform not in ("dwt", "modwt"):
         raise ValueError(transform)
-    step_us = (
-        int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
-        if sparse_fill_step is not None
-        else None
-    )
 
-    def _pyramid_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One Spark group = one BUCKET of conversations; every step below is
-        a whole-bucket numpy operation — per-conversation Python overhead is
-        amortized across the bucket (thousands of tiny per-conv UDF calls
-        were the profile's dominant cost)."""
-        pdf = pdf.sort_values([group_col, ts_col])
-        codes, uniques = pd.factorize(pdf[group_col], sort=False)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        counts = np.bincount(codes)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pos, nwin = _positions(pdf, codes, counts, starts, ts_col,
-                               step_us, window_len)
-        win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
-        total_win = int(nwin.sum())
-        M = np.zeros((total_win, window_len), dtype=np.float64)
-        M[win_base[codes] + pos // window_len, pos % window_len] = x
-
-        if transform == "dwt":
-            details, approx = kdwt.dwt_batch(M, wavelet, levels)
-        else:
-            details, approx = kdwt.modwt_batch(M, wavelet, levels)
-
-        win_code = np.repeat(np.arange(counts.size), nwin)
-        win_conv = np.asarray(uniques, dtype=object)[win_code]
-        win_id = (np.arange(total_win) - win_base[win_code]).astype(np.int32)
-
+    def _bands(M, win_conv, win_id):
         # one output row per (window, band): the per-coefficient long rows
         # (window_len rows per window, conv_id string repeated for each) made
         # the Arrow exchange and the workers' allocation churn the dominant
-        # cost at scale — the k-explosion now happens JVM-side (dwt_windows)
-        bands = [
-            *(((j + 1), d, "detail") for j, d in enumerate(details)),
-            (levels, approx, "approx"),
-        ]
-        n_bands = len(bands)
-        lvls = np.fromiter((b[0] for b in bands), dtype=np.int32, count=n_bands)
-        types = np.array([b[2] for b in bands], dtype=object)
-        coefs: list[np.ndarray] = []
-        for _lvl, C, _ctype in bands:
-            coefs.extend(np.ascontiguousarray(C))  # band-major, window within
-        return pd.DataFrame(
-            {
-                "conv_id": np.tile(win_conv, n_bands),
-                "window_id": np.tile(win_id, n_bands),
-                "wavelet": wavelet,
-                "level": np.repeat(lvls, total_win),
-                "coef_type": np.repeat(types, total_win),
-                "coefs": coefs,
-            }
-        )
+        # cost at scale — the k-explosion happens JVM-side (dwt_windows)
+        bands = _pyramid_bands(M, wavelet, levels, transform)
+        coefs = [row for _, C, _ in bands for row in np.ascontiguousarray(C)]
+        return _band_frame(win_conv, win_id, wavelet, bands, "coefs", coefs)
 
-    # Bucketed fan-out, task count derived from the projected input's
-    # size (python_stage_partitions): AQE's byte-based coalescing can't
-    # see Python CPU, and a fixed parallelism multiple overpays per-task
-    # overhead on small tiers. The explicit repartition on the bucket
-    # key both pins the task count and satisfies the groupBy clustering
-    # (no extra shuffle).
-    # explicit projection: Catalyst cannot prune columns INTO a grouped-map
-    # UDF (the whole row ships through Arrow), so drop everything the
-    # pyramid doesn't read before the shuffle
-    projected = filled.select(group_col, ts_col, value_col)
-    if n_partitions is None:
-        n_partitions = python_stage_partitions(projected)
-    n_buckets = n_partitions * 4
-    bucketed = projected.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(n_buckets))
-    )
-    return (
-        bucketed.repartition(n_partitions, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_pyramid_bucket, schema=BAND_SCHEMA)
-    )
+    return _window_pass(filled, value_col, window_len, sparse_fill_step,
+                        _bands, BAND_SCHEMA)
 
 
 def dwt_windows(
@@ -226,21 +280,17 @@ def dwt_windows(
     levels: int = 5,
     window_len: int | None = None,
     transform: str = "dwt",
-    group_col: str = "conv_id",
-    ts_col: str = "bucket_ts",
-    n_partitions: int | None = None,
     sparse_fill_step: str | None = None,
 ) -> DataFrame:
     """Long-format coefficient table (COEF_SCHEMA, one row per coefficient).
 
-    Same rows as the pre-band-form implementation; the per-coefficient
-    fan-out is a JVM-side ``posexplode`` over :func:`dwt_window_bands`'
-    ``array<double>`` column — whole-stage-codegen'd, never through Python.
+    The per-coefficient fan-out is a JVM-side ``posexplode`` over
+    :func:`dwt_window_bands`' ``array<double>`` column —
+    whole-stage-codegen'd, never through Python.
     """
     bands = dwt_window_bands(
         filled, value_col, wavelet=wavelet, levels=levels,
-        window_len=window_len, transform=transform, group_col=group_col,
-        ts_col=ts_col, n_partitions=n_partitions,
+        window_len=window_len, transform=transform,
         sparse_fill_step=sparse_fill_step,
     )
     return bands.select(
@@ -365,9 +415,6 @@ def energy_windows(
     levels: int = 5,
     window_len: int | None = None,
     transform: str = "dwt",
-    group_col: str = "conv_id",
-    ts_col: str = "bucket_ts",
-    n_partitions: int | None = None,
     sparse_fill_step: str | None = None,
 ) -> DataFrame:
     """Per-scale energy spectrum computed inside the pyramid pass — one
@@ -390,78 +437,16 @@ def energy_windows(
         window_len = (2**levels) * 8
     if transform not in ("dwt", "modwt", "wpt"):
         raise ValueError(transform)
-    step_us = (
-        int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
-        if sparse_fill_step is not None
-        else None
-    )
 
-    def _energy_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([group_col, ts_col])
-        codes, uniques = pd.factorize(pdf[group_col], sort=False)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        counts = np.bincount(codes)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pos, nwin = _positions(pdf, codes, counts, starts, ts_col,
-                               step_us, window_len)
-        win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
-        total_win = int(nwin.sum())
-        M = np.zeros((total_win, window_len), dtype=np.float64)
-        M[win_base[codes] + pos // window_len, pos % window_len] = x
-        if transform == "dwt":
-            details, approx = kdwt.dwt_batch(M, wavelet, levels)
-        elif transform == "modwt":
-            details, approx = kdwt.modwt_batch(M, wavelet, levels)
-        else:
-            details, approx = None, None
-
-        win_code = np.repeat(np.arange(counts.size), nwin)
-        win_conv = np.asarray(uniques, dtype=object)[win_code]
-        win_id = (np.arange(total_win) - win_base[win_code]).astype(np.int32)
-
-        if transform == "wpt":
-            bands = [
-                (levels, b, f"band{i:02d}")
-                for i, b in enumerate(kdwt.wpt_batch(M, wavelet, levels))
-            ]
-        else:
-            bands = [
-                *(((j + 1), d, "detail") for j, d in enumerate(details)),
-                (levels, approx, "approx"),
-            ]
-        n_bands = len(bands)
-        energies = np.empty((n_bands, total_win), dtype=np.float64)
-        lvls = np.empty(n_bands, dtype=np.int32)
-        types: list[str] = []
-        for i, (lvl, C, ctype) in enumerate(bands):
-            energies[i] = np.einsum("ij,ij->i", C, C)
-            lvls[i] = lvl
-            types.append(ctype)
-        return pd.DataFrame(
-            {
-                "conv_id": np.tile(win_conv, n_bands),
-                "window_id": np.tile(win_id, n_bands),
-                "wavelet": wavelet,
-                "level": np.repeat(lvls, total_win),
-                "coef_type": np.repeat(np.array(types, dtype=object), total_win),
-                "energy": energies.ravel(),
-            }
+    def _energies(M, win_conv, win_id):
+        bands = _pyramid_bands(M, wavelet, levels, transform)
+        energy = np.concatenate(
+            [np.einsum("ij,ij->i", C, C) for _, C, _ in bands]
         )
+        return _band_frame(win_conv, win_id, wavelet, bands, "energy", energy)
 
-    # same explicit pre-UDF projection and size-derived task count as
-    # dwt_window_bands
-    projected = filled.select(group_col, ts_col, value_col)
-    if n_partitions is None:
-        n_partitions = python_stage_partitions(projected)
-    n_buckets = n_partitions * 4
-    bucketed = projected.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(n_buckets))
-    )
-    return (
-        bucketed.repartition(n_partitions, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_energy_bucket, schema=ENERGY_SCHEMA)
-    )
+    return _window_pass(filled, value_col, window_len, sparse_fill_step,
+                        _energies, ENERGY_SCHEMA)
 
 
 DENOISE_SCHEMA = (
@@ -480,9 +465,6 @@ def denoise_windows(
     window_len: int | None = None,
     threshold: float | str = "universal",
     mode: str = "soft",
-    group_col: str = "conv_id",
-    ts_col: str = "bucket_ts",
-    n_partitions: int | None = None,
     sparse_fill_step: str | None = None,
 ) -> DataFrame:
     """Wavelet shrinkage denoising per dyadic window (Donoho–Johnstone
@@ -490,10 +472,10 @@ def denoise_windows(
     FINEST detail band's MAD (``sigma = median(|d1|)/0.6745`` — the finest
     band is almost pure noise for smooth signals) -> soft/hard-threshold
     every detail coefficient at the universal threshold
-    ``sigma * sqrt(2 ln n)`` (or a fixed ``threshold`` float) -> inverse
-    DWT. The approximation band is never shrunk.
+    ``sigma * sqrt(2 ln n)`` (or a fixed non-negative ``threshold`` float)
+    -> inverse DWT. The approximation band is never shrunk.
 
-    Same bucketed execution shape as :func:`dwt_window_bands` (one Arrow
+    Same bucketed window pass as :func:`dwt_window_bands` (one Arrow
     task per conversation bucket, whole-bucket numpy, per-window output
     rows). Each output row carries its own verification scalars, all from
     identities the kernel cannot fake:
@@ -511,27 +493,16 @@ def denoise_windows(
         window_len = (2**levels) * 8
     if mode not in ("soft", "hard"):
         raise ValueError(mode)
-    if isinstance(threshold, str) and threshold != "universal":
-        raise ValueError(threshold)
-    step_us = (
-        int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
-        if sparse_fill_step is not None
-        else None
-    )
+    if isinstance(threshold, str):
+        if threshold != "universal":
+            raise ValueError(threshold)
+    elif not float(threshold) >= 0.0:  # also rejects NaN
+        raise ValueError(
+            f"threshold must be 'universal' or >= 0, got {threshold!r}: a "
+            "negative one would inflate every detail coefficient"
+        )
 
-    def _denoise_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([group_col, ts_col])
-        codes, uniques = pd.factorize(pdf[group_col], sort=False)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        counts = np.bincount(codes)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pos, nwin = _positions(pdf, codes, counts, starts, ts_col,
-                               step_us, window_len)
-        win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
-        total_win = int(nwin.sum())
-        M = np.zeros((total_win, window_len), dtype=np.float64)
-        M[win_base[codes] + pos // window_len, pos % window_len] = x
-
+    def _denoise(M, win_conv, win_id):
         details, approx = kdwt.dwt_batch(M, wavelet, levels)
         input_energy = np.einsum("ij,ij->i", M, M)
         coef_energy = np.einsum("ij,ij->i", approx, approx)
@@ -542,10 +513,10 @@ def denoise_windows(
         if threshold == "universal":
             thr = sigma * np.sqrt(2.0 * np.log(window_len))
         else:
-            thr = np.full(total_win, float(threshold))
+            thr = np.full(len(M), float(threshold))
 
         shrunk = []
-        n_zeroed = np.zeros(total_win, dtype=np.int64)
+        n_zeroed = np.zeros(len(M), dtype=np.int64)
         n_detail = 0
         for d in details:
             n_detail += d.shape[1]
@@ -562,9 +533,6 @@ def denoise_windows(
         roundtrip = kdwt.idwt_batch(details, approx, wavelet)
         rt_num = np.sqrt(np.einsum("ij,ij->i", roundtrip - M, roundtrip - M))
         rt_den = np.maximum(np.sqrt(input_energy), 1e-300)
-        win_code = np.repeat(np.arange(counts.size), nwin)
-        win_conv = np.asarray(uniques, dtype=object)[win_code]
-        win_id = (np.arange(total_win) - win_base[win_code]).astype(np.int32)
         return pd.DataFrame(
             {
                 "conv_id": win_conv,
@@ -583,15 +551,5 @@ def denoise_windows(
             }
         )
 
-    projected = filled.select(group_col, ts_col, value_col)
-    if n_partitions is None:
-        n_partitions = python_stage_partitions(projected)
-    n_buckets = n_partitions * 4
-    bucketed = projected.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(n_buckets))
-    )
-    return (
-        bucketed.repartition(n_partitions, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_denoise_bucket, schema=DENOISE_SCHEMA)
-    )
+    return _window_pass(filled, value_col, window_len, sparse_fill_step,
+                        _denoise, DENOISE_SCHEMA)
